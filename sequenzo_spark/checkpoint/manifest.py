@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,10 +43,15 @@ class Manifest:
         self.path = path
 
     def _read(self) -> DataFrame | None:
+        """The manifest table, or None when nothing was ever committed (no
+        manifest directory). Any other read error propagates: a corrupt
+        manifest must not pass for an empty one."""
         try:
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
-        except Exception:
-            return None
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
 
     def completed(self, job_id: str, stage: str) -> set[str]:
         """Partition keys already committed for (job, stage). A partition
@@ -113,15 +119,3 @@ class Manifest:
             df = df.filter(F.col("job_id") == job_id)
         return df
 
-
-def partition_metrics(df: DataFrame, part_col: str) -> dict[str, tuple[int, int]]:
-    """Per-partition (rows, order-independent checksum) in one aggregation:
-    checksum = bit_xor(xxhash64(<all columns>))."""
-    cols = [c for c in df.columns]
-    agg = (
-        df.withColumn("_h", F.xxhash64(*cols))
-        .groupBy(part_col)
-        .agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(_h)").alias("cs"))
-        .collect()
-    )
-    return {str(r[part_col]): (r["n"], r["cs"]) for r in agg}

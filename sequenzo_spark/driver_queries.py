@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sequenzo_spark.caches import release_caches
 from sequenzo_spark.operators.distributions import (
     cross_sectional_distribution,
     cross_sectional_entropy,
@@ -243,11 +244,9 @@ def q_value_rollup_1h_from_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup over documents: hash-groupBy on md5(text); keeper =
     min(doc_id); one row per distinct text."""
-    docs = _t(spark, sf_dir, "documents")
-    return docs.groupBy(F.md5(F.col("text")).alias("text_hash")).agg(
-        F.count(F.lit(1)).alias("dup_count"),
-        F.min("doc_id").alias("keeper_doc_id"),
-    )
+    from sequenzo_spark.pipeline.dedup import exact_dedup
+
+    return exact_dedup(_t(spark, sf_dir, "documents"))
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,9 +649,9 @@ def q_minhash_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probabilistic MinHash path into an oracle-checkable statement: the
     DuckDB side computes exact all-candidate Jaccard, so any LSH recall miss
     at this SF surfaces as a row-count/hash mismatch."""
-    from sequenzo_spark.pipeline.dedup import minhash_verified_pairs, release_sig_caches
+    from sequenzo_spark.pipeline.dedup import minhash_verified_pairs
 
-    release_sig_caches()  # drop any signature table a previous query persisted
+    release_caches()  # drop any frame a previous query persisted
     docs = _t(spark, sf_dir, "documents")
     pairs = minhash_verified_pairs(docs, threshold=0.8)
     return pairs.select("d1", "d2", F.round("jaccard", R).alias("jaccard"))
@@ -683,9 +682,9 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64)+LSH(16 bands) near-dup candidates — probabilistic, so
     rows-only driver check; recall/precision asserted in unit tests."""
-    from sequenzo_spark.pipeline.dedup import minhash_lsh_candidates, release_sig_caches
+    from sequenzo_spark.pipeline.dedup import minhash_lsh_candidates
 
-    release_sig_caches()  # drop any signature table a previous query persisted
+    release_caches()  # drop any frame a previous query persisted
     docs = _t(spark, sf_dir, "documents")
     return minhash_lsh_candidates(docs).filter(F.col("jaccard_est") >= 0.5)
 
@@ -751,13 +750,9 @@ def q_frequent_event_subseq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sequenzo_spark.functions.seqops import to_event_rows
     from sequenzo_spark.operators.subsequences import frequent_subsequences
 
-    from sequenzo_spark.operators.subsequences import release_stats_caches
-
-    release_stats_caches()  # drop any stats table a previous query persisted
+    release_caches()  # drop any frame a previous query persisted
     ev = to_event_rows(_event_turns(spark, sf_dir))
-    out = frequent_subsequences(
-        ev, max_k=3, min_support_ratio=0.05, persist_stats=True
-    )
+    out = frequent_subsequences(ev, max_k=3, min_support_ratio=0.05)
     return out.select(
         "subseq", "k", "n_seqs", F.round("support", R).alias("support")
     )
@@ -772,13 +767,9 @@ def q_subseq_occurrence_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         count_subsequence_occurrences,
     )
 
-    from sequenzo_spark.operators.subsequences import release_stats_caches
-
-    release_stats_caches()
+    release_caches()
     ev = to_event_rows(_event_turns(spark, sf_dir))
-    return count_subsequence_occurrences(
-        ev, SUBSEQ_PATTERNS, method="count", persist_stats=True
-    )
+    return count_subsequence_occurrences(ev, SUBSEQ_PATTERNS, method="count")
 
 
 def q_subseq_group_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,23 +777,15 @@ def q_subseq_group_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seq_id parity) — compare_groups/seqecmpgroup semantics (core.py:785)
     with scipy's Yates-at-dof-1 convention."""
     from sequenzo_spark.functions.seqops import to_event_rows
-    from sequenzo_spark.operators.subsequences import (
-        compare_group_subsequences,
-        release_stats_caches,
-    )
+    from sequenzo_spark.operators.subsequences import compare_group_subsequences
 
-    release_stats_caches()
+    release_caches()
     turns = _event_turns(spark, sf_dir)
     ev = to_event_rows(turns)
     groups = turns.select("seq_id").distinct().select(
         "seq_id", (F.col("seq_id") % 2).alias("group")
     )
-    # persist_stats: the per-event aggregate feeds one cnt_df branch per
-    # pattern plus the dense-seqs frame — uncached it re-derived the whole
-    # event window pipeline once per pattern
-    out = compare_group_subsequences(
-        ev, groups, SUBSEQ_PATTERNS, persist_stats=True
-    )
+    out = compare_group_subsequences(ev, groups, SUBSEQ_PATTERNS)
     return out.select(
         "subseq",
         F.round("statistic", R).alias("statistic"),
@@ -844,16 +827,11 @@ def q_prefix_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (IndividualDivergence.compute_diverged / compute_standardized_rarity_score,
     prefix_tree/individual_level_indicators.py:99-280, :647) — window=2
     consecutive above-threshold years from depth 2 on."""
-    from sequenzo_spark.operators.prefix_tree import (
-        prefix_divergence,
-        release_prefix_caches,
-    )
+    from sequenzo_spark.operators.prefix_tree import prefix_divergence
 
-    release_prefix_caches()  # drop any rarity frame a previous query persisted
+    release_caches()  # drop any frame a previous query persisted
     turns = _event_turns(spark, sf_dir)
-    out = prefix_divergence(
-        turns, z_threshold=1.0, min_t=2, window=2, persist_stats=True
-    )
+    out = prefix_divergence(turns, z_threshold=1.0, min_t=2, window=2)
     return out.select(
         "seq_id",
         F.round("std_score", R).alias("std_score"),
@@ -916,16 +894,11 @@ def q_suffix_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     .compute_converged / compute_standardized_rarity_score,
     suffix_tree/individual_level_indicators.py:107-726) — window=2
     consecutive below-(−1.0)-z years from year 1 on."""
-    from sequenzo_spark.operators.suffix_tree import (
-        release_suffix_caches,
-        suffix_convergence,
-    )
+    from sequenzo_spark.operators.suffix_tree import suffix_convergence
 
-    release_suffix_caches()
+    release_caches()
     turns = _event_turns(spark, sf_dir)
-    out = suffix_convergence(
-        turns, z_threshold=1.0, min_t=1, window=2, persist_stats=True
-    )
+    out = suffix_convergence(turns, z_threshold=1.0, min_t=1, window=2)
     return out.select(
         "seq_id",
         F.round("std_score", R).alias("std_score"),
@@ -940,16 +913,12 @@ def q_suffix_convergence_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the floor(0.2·n_valid) smallest aggregated std_scores are flagged;
     first_convergence_t = earliest year whose window-max z is ≤ the
     selection threshold (:449-487)."""
-    from sequenzo_spark.operators.suffix_tree import (
-        release_suffix_caches,
-        suffix_convergence,
-    )
+    from sequenzo_spark.operators.suffix_tree import suffix_convergence
 
-    release_suffix_caches()
+    release_caches()
     turns = _event_turns(spark, sf_dir)
     out = suffix_convergence(
-        turns, min_t=1, window=1, method="top_proportion", proportion=0.2,
-        persist_stats=True,
+        turns, min_t=1, window=1, method="top_proportion", proportion=0.2
     )
     return out.select(
         "seq_id",
@@ -965,16 +934,12 @@ def q_prefix_divergence_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(0.2·n_valid) LARGEST aggregated std_scores are flagged
     (direction high); first_divergence_t = earliest year whose window-min
     z is ≥ the selection threshold."""
-    from sequenzo_spark.operators.prefix_tree import (
-        prefix_divergence,
-        release_prefix_caches,
-    )
+    from sequenzo_spark.operators.prefix_tree import prefix_divergence
 
-    release_prefix_caches()
+    release_caches()
     turns = _event_turns(spark, sf_dir)
     out = prefix_divergence(
-        turns, min_t=2, window=1, method="top_proportion", proportion=0.2,
-        persist_stats=True,
+        turns, min_t=2, window=1, method="top_proportion", proportion=0.2
     )
     return out.select(
         "seq_id",

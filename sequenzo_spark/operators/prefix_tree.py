@@ -42,25 +42,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# Persisted internal frames currently alive (the dedup-module registry
-# pattern): prefix_divergence(persist_stats=True) registers its rarity
-# frame here; release_prefix_caches() lets driver wrappers / bench drop
-# storage between plans.
-_LIVE_PREFIX_CACHES: list[DataFrame] = []
+from sequenzo_spark.caches import persist, release_caches
 
-
-def release_prefix_caches() -> int:
-    """Unpersist every frame persisted via ``persist_stats=True`` since
-    the last release. Plans that still reference one simply recompute."""
-    n = 0
-    while _LIVE_PREFIX_CACHES:
-        try:
-            _LIVE_PREFIX_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
-
+release_prefix_caches = release_caches  # name kept for existing importers
 
 SEP = "\x1f"  # unit separator: cannot appear in state labels (validated at ingest)
 
@@ -184,7 +168,6 @@ def prefix_divergence(
     order_col: str = "pos",
     state_col: str = "state",
     group_col: str | None = None,
-    persist_stats: bool = False,
     hashed: bool = False,
 ) -> DataFrame:
     """Individual divergence via the reference's z-score window method
@@ -260,11 +243,9 @@ def prefix_divergence(
             )
         ).alias("r"),
     )
-    if persist_stats:
-        # rar feeds both the per-depth moment aggregate and the z re-join;
-        # without the cache the window+join chain runs twice
-        rar = rar.persist()
-        _LIVE_PREFIX_CACHES.append(rar)
+    # rar feeds both the per-depth moment aggregate and the z re-join;
+    # without the cache the window+join chain runs twice
+    rar = persist(rar)
     # per-depth moments as plain partial-aggregating sums: O(1) state per
     # task (the previous ordered-fold collect_list held all N sequences'
     # rarities in ONE aggregation buffer — an OOM at the scale this module
@@ -389,7 +370,6 @@ def prefix_divergence(
         quantile_p=quantile_p,
         min_count=min_count,
         group_col=group_col,
-        cache_registry=_LIVE_PREFIX_CACHES,
     )
     # selection threshold: carried as the ``_thr`` column by select_by_score
     # (worst selected score for top_proportion, the percentile for quantile)

@@ -27,34 +27,18 @@ K² rows per sequence and k=3 K³ — bounded by the alphabet, not the data —
 and candidate patterns EMERGE from the joins (a pattern absent everywhere
 never materializes), so no driver-side alphabet enumeration is needed.
 All shuffles are keyed by seq_id; no UDFs. The per-event aggregate
-feeds 1-3 joins per call; pass persist_stats=True to cache it for the
-call's duration at production scale (plans stay pure by default so
-short-lived driver queries leak no storage; the caller unpersists).
+feeds 1-3 joins per call (one branch per pattern for the occurrence
+counts), so it is persisted through :mod:`sequenzo_spark.caches`; the
+caller releases it with ``release_caches()``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# Persisted per-event-stats tables currently alive (the dedup-module
-# registry pattern): persist_stats=True registers here so callers without
-# a handle on the internal frame — driver-query wrappers, bench — can
-# release storage between plans via release_stats_caches().
-_LIVE_STATS_CACHES: list[DataFrame] = []
+from sequenzo_spark.caches import persist, release_caches
 
-
-def release_stats_caches() -> int:
-    """Unpersist every per-event-stats table persisted via
-    ``persist_stats=True`` since the last release. Returns the count.
-    Plans that still reference a released table simply recompute it."""
-    n = 0
-    while _LIVE_STATS_CACHES:
-        try:
-            _LIVE_STATS_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+release_stats_caches = release_caches  # name kept for existing importers
 
 
 def _per_event_stats(
@@ -94,7 +78,6 @@ def frequent_subsequences(
     order_col: str = "pos",
     event_col: str = "event",
     weight_col: str | None = None,
-    persist_stats: bool = False,
 ) -> DataFrame:
     """Frequent subsequences of length 1..max_k (max_k ≤ 4) with presence
     (COBJ) support — find_frequent_subsequences semantics (core.py:601,
@@ -117,12 +100,9 @@ def frequent_subsequences(
         raise ValueError("max_k must be 1..4")
     if min_support is None and min_support_ratio is None:
         raise ValueError("specify min_support or min_support_ratio")
-    pe = _per_event_stats(
+    pe = persist(_per_event_stats(
         events, seq_col, order_col, event_col, weight_col, positions=(max_k >= 3)
-    )
-    if persist_stats:
-        pe = pe.persist()
-        _LIVE_STATS_CACHES.append(pe)
+    ))
     # the self-joins below co-key on seq_id with Kᵏ-row fan-out; sort-merge
     # measures ~20% faster than the session default shuffled-hash here (the
     # build-side hashmap over the full per-event table costs more than the
@@ -335,7 +315,6 @@ def count_subsequence_occurrences(
     seq_col: str = "seq_id",
     order_col: str = "pos",
     event_col: str = "event",
-    persist_stats: bool = False,
 ) -> DataFrame:
     """Per-sequence occurrence counts of the given patterns —
     count_subsequence_occurrences semantics (core.py:702).
@@ -356,12 +335,9 @@ def count_subsequence_occurrences(
     if method not in ("presence", "count"):
         raise ValueError("method must be 'presence' or 'count'")
     parsed = [(p, parse_subsequence(p)) for p in patterns]
-    pe = _per_event_stats(
+    pe = persist(_per_event_stats(
         events, seq_col, order_col, event_col, positions=True
-    )
-    if persist_stats:
-        pe = pe.persist()
-        _LIVE_STATS_CACHES.append(pe)
+    ))
     seqs = pe.select("seq_id").distinct()
 
     outs = []
@@ -448,7 +424,6 @@ def compare_group_subsequences(
     order_col: str = "pos",
     event_col: str = "event",
     group_col: str = "group",
-    persist_stats: bool = False,
 ) -> DataFrame:
     """Chi-square association between pattern presence and a group label —
     compare_groups semantics (core.py:785, _chi_square_tests :1614): a
@@ -463,8 +438,7 @@ def compare_group_subsequences(
     caller (the reference delegates it to scipy's chi2 CDF); ranking by
     statistic at fixed dof gives the same ordering."""
     pres = count_subsequence_occurrences(
-        events, patterns, "presence", seq_col, order_col, event_col,
-        persist_stats=persist_stats,
+        events, patterns, "presence", seq_col, order_col, event_col
     )
     g = groups.select(
         F.col(seq_col).alias("seq_id"), F.col(group_col).alias("group")

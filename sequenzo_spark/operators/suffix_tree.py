@@ -58,21 +58,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from sequenzo_spark.caches import persist, release_caches
+
 SEP = "\x1f"  # unit separator: cannot appear in state labels (validated at ingest)
 
-# persisted internal frames (registry pattern shared with prefix_tree)
-_LIVE_SUFFIX_CACHES: list[DataFrame] = []
-
-
-def release_suffix_caches() -> int:
-    n = 0
-    while _LIVE_SUFFIX_CACHES:
-        try:
-            _LIVE_SUFFIX_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+release_suffix_caches = release_caches  # name kept for existing importers
 
 
 def _suffix_rows(
@@ -263,7 +253,6 @@ def select_by_score(
     quantile_p: float | None,
     min_count: int,
     group_col: str | None = None,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Rank/quantile selection over an aggregated standardized score —
     the reference's "top_proportion" / "quantile" branches
@@ -323,12 +312,7 @@ def select_by_score(
         # by seq_id}, where s* = the k-th most extreme score. s* is exactly
         # the worst selected score, i.e. the old window formulation's
         # max/min-over-selected threshold.
-        # register in the CALLER's registry (prefix callers release via
-        # release_prefix_caches — a suffix-only registration would leak a
-        # live cache across that release, letting a re-built identical
-        # plan silently reuse it: the round-3 cache-assisted-warm trap)
-        cached = scored.persist()
-        (_LIVE_SUFFIX_CACHES if cache_registry is None else cache_registry).append(cached)
+        cached = persist(scored)
         n_valid = cached.where(sc.isNotNull()).count()
         k = min(max(math.floor(p * n_valid), int(min_count)), n_valid)
         if k <= 0:
@@ -377,8 +361,7 @@ def select_by_score(
         # exact percentile as an AGGREGATE (identical value to the old
         # whole-frame window percentile: same function, same multiset),
         # broadcast back — no single-partition window
-        cached = scored.persist()
-        (_LIVE_SUFFIX_CACHES if cache_registry is None else cache_registry).append(cached)
+        cached = persist(scored)
         thr_df = cached.agg(
             F.expr(f"percentile({score_col}, {q!r})").alias("_thr")
         )
@@ -405,7 +388,6 @@ def suffix_convergence(
     order_col: str = "pos",
     state_col: str = "state",
     group_col: str | None = None,
-    persist_stats: bool = False,
 ) -> DataFrame:
     """Individual convergence — the suffix mirror of prefix_divergence
     (IndividualConvergence.compute_converged /
@@ -471,9 +453,7 @@ def suffix_convergence(
             )
         ).alias("r"),
     )
-    if persist_stats:
-        rar = rar.persist()
-        _LIVE_SUFFIX_CACHES.append(rar)
+    rar = persist(rar)
     # per-level moments: bounded-state partial sums with the TWO-PASS
     # variance Σ(r−m)²/(cnt−1) (same rationale as prefix_divergence: the
     # one-pass form cancels catastrophically near zero variance and its

@@ -21,29 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# Persisted MinHash signature tables currently alive. A caller-side
-# transformation on the result DataFrame silently drops a monkey-patched
-# attribute (the round-3 advisor finding), so the authoritative release
-# mechanism is this module-level registry + :func:`release_sig_caches`;
-# driver-query wrappers call it before building a new plan, bounding the
-# session to one live signature cache at a time. The `_sig_cache` attribute
-# on results is kept as a convenience handle only.
-_LIVE_SIG_CACHES: list[DataFrame] = []
+from sequenzo_spark.caches import persist, release_caches
 
-
-def release_sig_caches() -> int:
-    """Unpersist every signature table persisted by
-    :func:`minhash_lsh_candidates` since the last release. Returns the number
-    released. Safe to call at any time: plans that still reference a released
-    table simply recompute it."""
-    n = 0
-    while _LIVE_SIG_CACHES:
-        try:
-            _LIVE_SIG_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+release_sig_caches = release_caches  # name kept for existing importers
 
 
 def tokens_col(text_col: str = "text") -> F.Column:
@@ -117,7 +97,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_shingle_df: int | None = 10_000,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Exact near-dup pairs with word-n-gram Jaccard ≥ threshold.
 
@@ -128,21 +107,7 @@ def ngram_jaccard_pairs(
     Denominators keep the full shingle-set sizes, so capped Jaccard is a
     lower bound of true Jaccard; pairs whose similarity lives on rare
     shingles are still found exactly. Default 10k: inert at test scale,
-    bounds any single shingle's join fan-out to 10⁸ rows at 100 TB.
-
-    ``prefix_filter=True`` switches candidate generation to the classic
-    prefix filter (Bayardo et al., WWW'07 "Scaling Up All Pairs Similarity
-    Search"): under a common rarest-first total order, any pair with capped
-    Jaccard ≥ τ must share a shingle inside both docs' first
-    |capped| − ⌈τ·|full|⌉ + 1 shingles, so the quadratic self-join runs on
-    ~(1−τ) of the rows and the exact capped intersection is recomputed from
-    per-doc capped arrays (identical output, proven by the overlap bound
-    i ≥ ⌈τ·|a|⌉ plus pigeonhole; differential-tested against the direct
-    join on four corpora including a 250k-pair near-dup stress set). This
-    is the production default for large corpora — at 10× bench scale it is
-    ~25% faster and the gap widens with corpus size; the direct join stays
-    the default because its fewer stages win at small scale (the declared
-    bench query's regime)."""
+    bounds any single shingle's join fan-out to 10⁸ rows at 100 TB."""
     sh = _shingle_rows(docs, text_col, id_col, n)
     # explode_outer, not explode: InferFiltersFromGenerate synthesizes a
     # size(sh)>0 filter for plain explode, and filter pushdown then
@@ -168,60 +133,6 @@ def ngram_jaccard_pairs(
     keep = F.col("df") >= 2
     if max_shingle_df:
         keep = keep & (F.col("df") <= max_shingle_df)
-    if prefix_filter:
-        exf = ex.filter(keep)
-        # per-doc capped shingles sorted rarest-first by (df, s); c stays
-        # the FULL set size so capped-Jaccard semantics are unchanged
-        docagg = exf.groupBy("doc_id").agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("df"), F.col("s")))
-            ).alias("_a"),
-            F.first("c").alias("c"),
-        )
-        sa = F.transform(F.col("_a"), lambda x: x["s"])
-        # prefix length p = |capped| − ⌈τ·|full|⌉ + 1; p ≤ 0 ⇒ the doc
-        # cannot reach the required overlap ⌈τ·|full|⌉ with any partner
-        p = (
-            F.size("_a")
-            - F.ceil(F.lit(float(threshold)) * F.col("c"))
-            + 1
-        ).cast("int")
-        docagg = docagg.select("doc_id", sa.alias("_s"), "c", p.alias("_p"))
-        pref = docagg.filter(F.col("_p") > 0).select(
-            "doc_id", F.explode(F.slice("_s", 1, F.col("_p"))).alias("s")
-        )
-        pa, pb = pref.alias("a"), pref.alias("b")
-        cand = (
-            pa.join(
-                pb,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-            )
-            .distinct()
-        )
-        j = cand.join(
-            docagg.select(
-                F.col("doc_id").alias("d1"),
-                F.col("_s").alias("s1"),
-                F.col("c").alias("c1"),
-            ),
-            "d1",
-        ).join(
-            docagg.select(
-                F.col("doc_id").alias("d2"),
-                F.col("_s").alias("s2"),
-                F.col("c").alias("c2"),
-            ),
-            "d2",
-        )
-        inter = F.size(F.array_intersect("s1", "s2"))
-        jac = inter / (F.col("c1") + F.col("c2") - inter)
-        return j.select("d1", "d2", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= threshold
-        )
     ex = ex.filter(keep).drop("df")
     a = ex.alias("a")
     b = ex.alias("b")
@@ -292,13 +203,12 @@ def minhash_lsh_candidates(
     (band, bucket_hash), never O(n²).
 
     The internal signature table is persisted (it feeds the band join and
-    both re-attach joins); the handle is exposed on the result as
-    ``result._sig_cache`` so long-lived sessions can release the storage
-    after materializing the pairs: ``result._sig_cache.unpersist()``.
+    both re-attach joins) through :mod:`sequenzo_spark.caches`; release
+    the storage after materializing the pairs with ``release_caches()``.
 
     Timing note (round-5 probe): computing the 64-hash signatures is
     itself ~70-80% of this query's wall at sf0.1 (~4 s of ~5 s warm).
-    Round 3's 2.0 s "warm" number predates the cache registries — its
+    Round 3's 2.0 s "warm" number predates the cache registry — its
     second run silently reused the FIRST run's still-persisted signature
     table (the leak the round-3 advisor flagged); once releases run
     between plans, the honest warm time includes signature computation.
@@ -309,8 +219,7 @@ def minhash_lsh_candidates(
     # Persist signatures: referenced three times below (band join on ids,
     # then one re-attach per pair side). At cluster scale this is the
     # materialized signature table.
-    sig = minhash_signatures(docs, n_hashes, n, text_col, id_col).persist()
-    _LIVE_SIG_CACHES.append(sig)
+    sig = persist(minhash_signatures(docs, n_hashes, n, text_col, id_col))
     # Band join carries ONLY (doc_id, band, bucket) through the shuffle —
     # never the 64-long signatures (signature payload on both sides of a
     # skewed self-join was the round-1 perf finding).
@@ -367,9 +276,7 @@ def minhash_lsh_candidates(
         ).cast("double")
         / F.lit(float(n_hashes))
     )
-    result = cand.select("d1", "d2", est.alias("jaccard_est"))
-    result._sig_cache = sig  # release handle — see docstring
-    return result
+    return cand.select("d1", "d2", est.alias("jaccard_est"))
 
 
 def _simhash_count_rows(
@@ -505,8 +412,9 @@ def minhash_verified_pairs(
     trades candidate-join fan-out, never the answer. This makes the
     probabilistic path ORACLE-CHECKABLE against the exact all-candidate SQL
     (the driver gate records any deterministic miss as a hash mismatch)."""
-    raw_cand = minhash_lsh_candidates(docs, n_hashes, bands, n, text_col, id_col)
-    cand = raw_cand.select("d1", "d2")
+    cand = minhash_lsh_candidates(
+        docs, n_hashes, bands, n, text_col, id_col
+    ).select("d1", "d2")
     sh = _shingle_rows(docs, text_col, id_col, n)
     j = cand.join(
         sh.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1")), "d1"
@@ -517,9 +425,6 @@ def minhash_verified_pairs(
     jac = inter.cast("double") / (
         F.size("sh1") + F.size("sh2") - inter
     ).cast("double")
-    result = j.select("d1", "d2", jac.alias("jaccard")).filter(
+    return j.select("d1", "d2", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-    # propagate the signature-cache release handle (see minhash_lsh_candidates)
-    result._sig_cache = raw_cand._sig_cache
-    return result

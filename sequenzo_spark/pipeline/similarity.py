@@ -23,8 +23,11 @@ def _no_pushdown(cond: F.Column) -> F.Column:
     NONDETERMINISTIC term (monotonically_increasing_id() is ≥ 0 by
     construction, so the predicate's VALUE is unchanged, but predicates
     containing a nondeterministic subexpression are never pushed, and OR
-    terms are not split). Without this the 32 interpreted hyperplane dot
-    products of the LSH candidate filter sink into the single-partition
+    terms are not split). This blocks pushdown on every deployment, a
+    cluster included: the filter always runs above the repartition. On a
+    many-partition scan ``_spread`` is a no-op, so the filter then runs in
+    the scan's own stage. Without this the 32 interpreted hyperplane dot
+    products of the LSH candidate filter sink into a single-partition
     parquet scan and run on one core (guide §2 — the local fixture files
     are one row group, i.e. unsplittable)."""
     return (F.monotonically_increasing_id() < 0) | cond
@@ -46,10 +49,6 @@ def _norm(a) -> F.Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def cosine_col(a, b) -> F.Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _py_norm(vec: list[float]) -> float:
@@ -151,11 +150,9 @@ def lsh_cosine_topk(
         eq = signature_bits_col(vec_col, planes) == F.lit(qb)
         cond = eq if cond is None else (cond | eq)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    # On a parallel scan the bucket filter pushes into the scan (the
-    # design point at cluster scale); on the local single-row-group
-    # fixture that would serialize 32 interpreted dot products per row
-    # onto one core, so spread first and pin the filter above the
-    # repartition (see _no_pushdown).
+    # spread first and pin the bucket filter above the repartition (see
+    # _no_pushdown): pushed into a single-row-group scan it would run 32
+    # interpreted dot products per row on one core
     qn = F.lit(_py_norm(query_vec))
     scored = (
         _spread(vectors).filter(_no_pushdown(cond))

@@ -5,16 +5,10 @@ from sequenzo_spark.rollup.aggregates import (
     merge_spells,
     merge_state_counts,
     merge_transitions,
-    rollup_spells,
-    rollup_state_counts,
-    rollup_transitions,
 )
 from sequenzo_spark.rollup.cascade import run_cascade
 
 __all__ = [
-    "rollup_state_counts",
-    "rollup_transitions",
-    "rollup_spells",
     "merge_state_counts",
     "merge_transitions",
     "merge_spells",

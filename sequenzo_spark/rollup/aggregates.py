@@ -47,92 +47,6 @@ def with_conv_bucket(df: DataFrame, conv_col: str = "conv_id", buckets: int = 32
 
 # ------------------------------------------------------------ raw → tier
 
-def rollup_state_counts(
-    turns: DataFrame,
-    tier: str = "1m",
-    state_col: str = "state",
-    ts_col: str = "ts",
-    weight_col: str | None = None,
-) -> DataFrame:
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    return (
-        turns.filter(F.col(state_col).isNotNull())
-        .groupBy(
-            "conv_bucket",
-            BUCKET_EXPRS[tier](F.col(ts_col)).alias("time_bucket"),
-            F.col(state_col).alias("state"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_turns"), F.sum(w).alias("w_sum"))
-    )
-
-
-def rollup_transitions(
-    turns: DataFrame,
-    tier: str = "1m",
-    seq_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    state_col: str = "state",
-    ts_col: str = "ts",
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Transition attributed to the bucket of the FROM turn. The lead() is
-    computed over the full sequence before bucketing, so bucket-boundary
-    transitions are never lost — merging buckets reproduces the global
-    matrix exactly."""
-    win = Window.partitionBy(seq_col).orderBy(order_col)
-    w = F.col(weight_col) if weight_col else F.lit(1.0)
-    pairs = turns.select(
-        "conv_bucket",
-        BUCKET_EXPRS[tier](F.col(ts_col)).alias("time_bucket"),
-        F.col(state_col).alias("from_state"),
-        F.lead(state_col).over(win).alias("to_state"),
-        w.alias("_w"),
-    ).filter(F.col("from_state").isNotNull() & F.col("to_state").isNotNull())
-    return pairs.groupBy(
-        "conv_bucket", "time_bucket", "from_state", "to_state"
-    ).agg(F.count(F.lit(1)).alias("t_count"), F.sum("_w").alias("w_count"))
-
-
-def rollup_spells(
-    turns: DataFrame,
-    tier: str = "1m",
-    seq_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    state_col: str = "state",
-    ts_col: str = "ts",
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Spell stats per (conv_bucket, bucket-of-spell-start, state)."""
-    from sequenzo_spark.operators.spells import spell_table
-
-    spells = spell_table(
-        turns,
-        seq_col=seq_col,
-        order_col=order_col,
-        state_col=state_col,
-        ts_col=ts_col,
-    )
-    # conv_bucket is a pure function of conv_id — recompute, never join.
-    salted = spells.withColumn(
-        "conv_bucket",
-        F.pmod(F.xxhash64(F.col(seq_col)), F.lit(salt_buckets)).cast("int"),
-    )
-    return (
-        salted.groupBy(
-            "conv_bucket",
-            BUCKET_EXPRS[tier](F.col("ts_start")).alias("time_bucket"),
-            "state",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_spells"),
-            F.sum("duration").alias("dur_sum"),
-            F.sum(F.col("duration") * F.col("duration")).alias("dur_sq_sum"),
-            F.min("duration").alias("dur_min"),
-            F.max("duration").alias("dur_max"),
-        )
-    )
-
-
 def rollup_1m_fused(
     turns: DataFrame,
     seq_col: str = "conv_id",

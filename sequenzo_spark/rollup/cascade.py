@@ -99,7 +99,6 @@ def _write_and_measure(
     spark: SparkSession,
     df: DataFrame,
     path: str,
-    checksums: bool = False,
     read_filter=None,
 ) -> list[tuple[str, int, int | None]]:
     """Checksum-less write path (the bulk passthrough encode stage): write
@@ -115,7 +114,6 @@ def _write_and_measure(
     Repartitions by the write layout first: one task per (cb, date)
     partition dir → one file each, instead of every task spraying a small
     file into every dir (small-files write amplification)."""
-    assert not checksums, "checksummed writes are fused in run_stage"
     df.repartition(*[F.col(c) for c in PART_COLS]).write.mode(
         "overwrite"
     ).partitionBy(*PART_COLS).parquet(path)
@@ -150,6 +148,7 @@ def _check_job_config(
     already-committed batches (round-5 advisor finding)."""
     import json
     import os
+    import uuid
 
     path = f"{out_root}/_job_config.json"
     cfg = dict(
@@ -172,9 +171,13 @@ def _check_job_config(
                 "delete the old tables"
             )
     else:
+        # temp file + atomic rename (Manifest.commit's protocol): a crash
+        # mid-write must not leave a truncated config that fails every resume
         os.makedirs(out_root, exist_ok=True)
-        with open(path, "w") as f:
+        tmp = f"{out_root}/.tmp-{uuid.uuid4().hex}.json"
+        with open(tmp, "w") as f:
             json.dump(cfg, f)
+        os.replace(tmp, path)
 
 
 def run_cascade(
@@ -259,7 +262,6 @@ def run_cascade(
                         spark,
                         tdf,
                         _path_of(tname),
-                        checksums=False,
                         read_filter=(
                             read_filter_of(batch) if read_filter_of else None
                         ),

@@ -1,6 +1,7 @@
 import pytest
 
 from sequenzo_spark import get_spark
+from sequenzo_spark.caches import release_caches
 
 
 @pytest.fixture(scope="session")
@@ -8,6 +9,15 @@ def spark():
     s = get_spark("sequenzo-spark-tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_operator_caches():
+    """Operators persist intermediate frames through one registry; drop
+    them after every test so the session-scoped Spark does not accumulate
+    cached frames across the suite."""
+    yield
+    release_caches()
 
 
 @pytest.fixture(scope="session")

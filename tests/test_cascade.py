@@ -175,3 +175,54 @@ def test_compress_flag_is_config_drift(spark, raw, tmp_path):
             spark, raw, out, states=ROLE_ALPHABET, salt_buckets=SALT,
             job_id="jc", compress=True,
         )
+
+
+def test_manifest_read_errors_are_not_an_empty_manifest(spark, tmp_path):
+    """Only a missing manifest directory means "nothing committed"; a
+    truncated manifest file or an unreadable location must raise instead
+    of silently restarting the job from scratch."""
+    from py4j.protocol import Py4JJavaError
+
+    fresh = Manifest(spark, str(tmp_path / "fresh" / "_manifest"))
+    assert fresh.completed("j", "encode") == set()
+
+    path = tmp_path / "corrupt" / "_manifest"
+    m = Manifest(spark, str(path))
+    m.commit([dict(
+        job_id="j", stage="encode", partition_key="0/2024-01-01",
+        table="encoded_turns", rows_out=1, checksum=None, wall_ms=0,
+    )])
+    assert m.completed("j", "encode") == {"0/2024-01-01"}
+    (part,) = path.glob("part-*.parquet")
+    part.write_bytes(part.read_bytes()[: part.stat().st_size // 2])
+    with pytest.raises(Py4JJavaError):
+        m.completed("j", "encode")
+
+    with pytest.raises(Py4JJavaError):
+        Manifest(spark, "nosuchfs://host/_manifest").completed("j", "encode")
+
+
+def test_torn_job_config_write_leaves_no_config(spark, raw, tmp_path, monkeypatch):
+    """_job_config.json appears only by rename: a crash while writing it
+    leaves no half-written config, so the rerun starts cleanly instead of
+    failing every resume on unparseable JSON."""
+    import json
+
+    def torn_dump(obj, f, *args, **kwargs):
+        f.write('{"job_id": ')
+        raise OSError("disk full")
+
+    out = str(tmp_path / "cascade_cfg")
+    empty = raw.filter("1 = 0")
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        run_cascade(
+            spark, empty, out, states=ROLE_ALPHABET, salt_buckets=SALT,
+            job_id="jcfg",
+        )
+    monkeypatch.undo()
+    run_cascade(
+        spark, empty, out, states=ROLE_ALPHABET, salt_buckets=SALT, job_id="jcfg"
+    )
+    with open(f"{out}/_job_config.json") as f:
+        assert json.load(f)["salt_buckets"] == SALT

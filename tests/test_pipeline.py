@@ -176,6 +176,25 @@ def test_minhash_verified_pairs_equals_exact(spark):
     }
     assert got == want and got == {(1, 2)}, (got, want)
 
+    # threshold boundary at n=1: J(1, 2) = 55/100 is exactly τ = 0.55 and
+    # must be emitted (ceil(0.55*100) in floating point is 56, the bound a
+    # prefix filter got wrong); the a* tokens occur in docs 1 and 3, so
+    # they survive the df == 1 pruning and J(1, 3) = 0.45 stays below τ
+    a_toks = [f"a{i}" for i in range(45)]
+    b_toks = [f"b{i}" for i in range(55)]
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(a_toks + b_toks)),
+            (2, " ".join(b_toks)),
+            (3, " ".join(a_toks)),
+        ],
+        "doc_id long, text string",
+    )
+    got = [tuple(r) for r in ngram_jaccard_pairs(docs, threshold=0.55, n=1).collect()]
+    assert got == [(1, 2, 0.55)], got
+    verified = minhash_verified_pairs(docs, threshold=0.55, n=1).collect()
+    assert [tuple(r) for r in verified] == [(1, 2, 0.55)], verified
+
 
 def test_simhash_hilo_matches_python_md5_reference(spark):
     """simhash64_hilo's per-row fold (shared with simhash64) must reproduce
@@ -210,21 +229,3 @@ def test_simhash_hilo_matches_python_md5_reference(spark):
         )
         assert got[doc_id] == want, doc_id
 
-
-def test_ngram_prefix_filter_mode_identical(spark, docs):
-    """prefix_filter=True (Bayardo-style candidate generation + capped-array
-    rescore) must produce BIT-IDENTICAL pairs and Jaccard values to the
-    direct self-join, at several thresholds (the completeness proof's
-    overlap bound i >= ceil(tau*|full|) is exercised at each)."""
-    for tau in (0.5, 0.8, 0.9):
-        direct = sorted(
-            tuple(r) for r in ngram_jaccard_pairs(docs, threshold=tau).collect()
-        )
-        pf = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(
-                docs, threshold=tau, prefix_filter=True
-            ).collect()
-        )
-        assert direct == pf, (tau, len(direct), len(pf))
-        assert len(direct) > 0  # planted near-dups exist at every tau here

@@ -3,12 +3,26 @@ source, deterministic)."""
 
 from pyspark.sql import functions as F
 
-from sequenzo_spark.rollup.aggregates import rollup_state_counts, with_conv_bucket
+from sequenzo_spark.rollup.aggregates import BUCKET_EXPRS, with_conv_bucket
 from sequenzo_spark.schema import TRANSCRIPT_SCHEMA
 from sequenzo_spark.streaming.rollup_stream import streaming_state_counts_1m
 from sequenzo_spark.synth import generate_transcripts
 
 SALT = 4
+
+
+def rollup_state_counts(turns, tier="1m", state_col="state", ts_col="ts"):
+    """Batch oracle for the streaming tier: unweighted state counts per
+    (conv_bucket, tier bucket, state), NULL states dropped."""
+    return (
+        turns.filter(F.col(state_col).isNotNull())
+        .groupBy(
+            "conv_bucket",
+            BUCKET_EXPRS[tier](F.col(ts_col)).alias("time_bucket"),
+            F.col(state_col).alias("state"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_turns"), F.sum(F.lit(1.0)).alias("w_sum"))
+    )
 
 
 def test_streaming_matches_batch_1m(spark, tmp_path):
