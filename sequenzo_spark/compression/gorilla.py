@@ -142,6 +142,23 @@ def _bit_length_u64(x: np.ndarray) -> np.ndarray:
     return np.searchsorted(_POW2, x, side="right").astype(np.int64)
 
 
+def _check_size(
+    blob: bytes, total_bits: int, n: int, size: int, complete: bool = True
+) -> None:
+    """Reject a blob that is not ``size`` bytes (at least ``size`` while
+    the layout is still being read) or whose ``total_bits`` disagrees
+    with its length: a truncated or extended blob would otherwise decode
+    to garbage (short reads are zero-padded)."""
+    if n < 0 or total_bits != 8 * len(blob):
+        raise ValueError(
+            f"gorilla blob: n={n}, total_bits={total_bits}, {len(blob)} bytes"
+        )
+    if len(blob) < size or (complete and len(blob) != size):
+        raise ValueError(
+            f"gorilla blob: {len(blob)} bytes, layout for n={n} needs {size}"
+        )
+
+
 def _signed(u: int, bits: int = 64) -> int:
     return u - (1 << bits) if u >= (1 << (bits - 1)) else u
 
@@ -184,6 +201,9 @@ def encode_timestamps(ts: np.ndarray) -> tuple[bytes, int, int]:
 
 
 def decode_timestamps(blob: bytes, total_bits: int, n: int) -> np.ndarray:
+    """Inverse of encode_timestamps. Raises ValueError unless the blob is
+    exactly the layout size that ``n`` and its control stream imply."""
+    _check_size(blob, total_bits, n, min(n, 2) * 8, complete=n <= 2)
     if n == 0:
         return np.empty(0, dtype=np.int64)
     t0 = _signed(int.from_bytes(blob[:8], "big"))
@@ -193,8 +213,10 @@ def decode_timestamps(blob: bytes, total_bits: int, n: int) -> np.ndarray:
     if n == 2:
         return np.array([t0, t0 + d0], dtype=np.int64)
     cb = (2 * (n - 2) + 7) // 8
+    _check_size(blob, total_bits, n, 16 + cb, complete=False)
     ctrl = _unpack_ctrl2(blob[16 : 16 + cb], n - 2)
     w = _TS_WIDTHS[ctrl]
+    _check_size(blob, total_bits, n, 16 + cb + (int(w.sum()) + 7) // 8)
     offs = np.cumsum(w) - w
     pay = _read_fields(blob[16 + cb :], offs, w)
     dod = np.zeros(n - 2, dtype=np.int64)
@@ -296,18 +318,28 @@ def encode_values(vals: np.ndarray) -> tuple[bytes, int, int]:
 
 
 def decode_values(blob: bytes, total_bits: int, n: int) -> np.ndarray:
+    """Inverse of encode_values. Raises ValueError unless the blob is
+    exactly the layout size that ``n``, its control stream and its window
+    heads imply."""
+    _check_size(blob, total_bits, n, min(n, 1) * 8, complete=n <= 1)
     if n == 0:
         return np.empty(0, dtype=np.float64)
     u0 = np.uint64(int.from_bytes(blob[:8], "big"))
     if n == 1:
         return np.array([u0], dtype=np.uint64).view(np.float64)
     cb = (2 * (n - 1) + 7) // 8
+    _check_size(blob, total_bits, n, 8 + cb, complete=False)
     ctrl = _unpack_ctrl2(blob[8 : 8 + cb], n - 1)
+    if (ctrl == 3).any():
+        raise ValueError("gorilla value blob: invalid control code 3")
     new = ctrl == 2
     n_new = int(new.sum())
     x = np.zeros(n - 1, dtype=np.uint64)
-    if n_new:
+    if not n_new:
+        _check_size(blob, total_bits, n, 8 + cb)
+    else:
         hb = (11 * n_new + 7) // 8
+        _check_size(blob, total_bits, n, 8 + cb + hb, complete=False)
         heads = _read_fields(
             blob[8 + cb : 8 + cb + hb],
             np.arange(n_new, dtype=np.int64) * 11,
@@ -319,6 +351,7 @@ def decode_values(blob: bytes, total_bits: int, n: int) -> np.ndarray:
         Lp = L[widx]
         Sp = S[widx]
         w = np.where(ctrl == 0, 0, Sp)
+        _check_size(blob, total_bits, n, 8 + cb + hb + (int(w.sum()) + 7) // 8)
         offs = np.cumsum(w) - w
         pay = _read_fields(blob[8 + cb + hb :], offs, w)
         nz = ctrl != 0

@@ -692,7 +692,7 @@ def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash fingerprints, engine-portable md5 token hash (hi/lo
     packed as two non-negative longs) — value-for-value ORACLE-CHECKED
-    against DuckDB's identical md5/hex/bit arithmetic. The xxhash64-hashed
+    against DuckDB's identical md5/hex/bit arithmetic. The xxhash64
     production variant (`simhash64`) shares the same shuffle-free per-row
     fold and is unit-tested for bit-identity of the fold itself."""
     from sequenzo_spark.pipeline.dedup import simhash64_hilo
@@ -1324,7 +1324,7 @@ def _ann_batch_oracle_sql() -> str:
 
 def _simhash_oracle_sql() -> str:
     """DuckDB SimHash oracle, generated: 64 per-bit conditional sums over
-    the md5-hashed token multiset, then majority-bit packing into the same
+    the md5 hashes of the token multiset, then majority-bit packing into the same
     (simhash_hi, simhash_lo) non-negative longs as simhash64_hilo."""
     bit_sums = ",\n               ".join(
         f"sum(CASE WHEN (({'lo' if b < 32 else 'hi'} >> {b % 32}) & 1) = 1 "

@@ -107,13 +107,47 @@ def test_cascade_end_to_end(spark, raw, tmp_path):
     assert sum(res2.partitions_skipped.values()) > 0
 
 
-def test_kill_and_resume_identical_output(spark, raw, tmp_path):
-    clean_out = str(tmp_path / "clean")
+TABLES = (
+    "encode",
+    "rollup_1m/state_counts", "rollup_1m/transitions", "rollup_1m/spells",
+    "rollup_1h/state_counts", "rollup_1h/transitions", "rollup_1h/spells",
+    "rollup_1d/state_counts", "rollup_1d/transitions", "rollup_1d/spells",
+    "gorilla/chunks",
+)
+
+
+@pytest.fixture(scope="module")
+def clean_out(spark, raw, tmp_path_factory):
+    """One uninterrupted run: the reference every resumed run must equal."""
+    out = str(tmp_path_factory.mktemp("clean"))
     run_cascade(
-        spark, raw, clean_out, states=ROLE_ALPHABET, salt_buckets=SALT,
+        spark, raw, out, states=ROLE_ALPHABET, salt_buckets=SALT,
         job_id="clean",
     )
+    return out
 
+
+def _resume_and_compare(spark, raw, clean_out, crash_out):
+    """Resume the crashed job, then require its tiers, Gorilla chunks and
+    manifest lineage (per-partition rows and checksums) to equal the
+    uninterrupted run's, bit-exactly."""
+    res = run_cascade(
+        spark, raw, crash_out, states=ROLE_ALPHABET, salt_buckets=SALT,
+        job_id="crash", batch_buckets=1, batch_dates=1,
+    )
+    for table in TABLES:
+        a = spark.read.parquet(f"{clean_out}/{table}")
+        b = spark.read.parquet(f"{crash_out}/{table}")
+        cols = sorted(a.columns)
+        assert _rows(a, cols) == _rows(b, cols), table
+    lineage = ["stage", "partition_key", "table", "rows_out", "checksum"]
+    want = Manifest(spark, f"{clean_out}/_manifest").stats("clean")
+    got = Manifest(spark, f"{crash_out}/_manifest").stats("crash")
+    assert _rows(got, lineage) == _rows(want, lineage)
+    return res, got
+
+
+def test_kill_and_resume_identical_output(spark, raw, clean_out, tmp_path):
     crash_out = str(tmp_path / "crash")
     with pytest.raises(InjectedFailure):
         run_cascade(
@@ -121,31 +155,48 @@ def test_kill_and_resume_identical_output(spark, raw, tmp_path):
             job_id="crash", batch_buckets=1, batch_dates=1,
             fail_after_batches=3,
         )
-    # resume: must complete and must skip the committed partitions
-    res = run_cascade(
-        spark, raw, crash_out, states=ROLE_ALPHABET, salt_buckets=SALT,
-        job_id="crash", batch_buckets=1, batch_dates=1,
-    )
+    # resume: must complete, must skip the committed partitions, and must
+    # match the clean one-shot run
+    res, manifest = _resume_and_compare(spark, raw, clean_out, crash_out)
     assert sum(res.partitions_skipped.values()) >= 3
 
-    # outputs identical to the clean one-shot run, bit-exactly
-    for table in (
-        "encode",
-        "rollup_1m/state_counts", "rollup_1m/transitions", "rollup_1m/spells",
-        "rollup_1h/state_counts", "rollup_1h/transitions", "rollup_1h/spells",
-        "rollup_1d/state_counts", "rollup_1d/transitions", "rollup_1d/spells",
-        "gorilla/chunks",
-    ):
-        a = spark.read.parquet(f"{clean_out}/{table}")
-        b = spark.read.parquet(f"{crash_out}/{table}")
-        cols = sorted(a.columns)
-        assert _rows(a, cols) == _rows(b, cols), table
-
     # manifest has per-partition lineage rows with metrics
-    m = Manifest(spark, f"{crash_out}/_manifest").stats("crash")
-    rows = m.collect()
+    rows = manifest.collect()
     assert all(r.rows_out >= 0 and r.wall_ms >= 0 for r in rows)
     assert {r.stage for r in rows} == {"encode", "rollup_1m", "rollup_1h1d"}
+
+
+@pytest.mark.parametrize("stage", ["rollup_1m", "rollup_1h1d"])
+def test_commit_failure_resume_identical_output(
+    spark, raw, clean_out, tmp_path, monkeypatch, stage
+):
+    """The commit protocol's other failure window: a batch's data is
+    written but its lineage is not committed (the manifest commit of the
+    stage's 2nd batch raises). Resume must redo that batch over the
+    already-written partitions and end bit-identical to the clean run."""
+    commit = Manifest.commit
+    calls = {"n": 0}
+
+    def failing_commit(self, rows):
+        if rows and rows[0]["stage"] == stage:
+            calls["n"] += 1
+            if calls["n"] == 2:
+                raise InjectedFailure(f"manifest commit failed in {stage}")
+        commit(self, rows)
+
+    crash_out = str(tmp_path / "crash")
+    monkeypatch.setattr(Manifest, "commit", failing_commit)
+    with pytest.raises(InjectedFailure):
+        run_cascade(
+            spark, raw, crash_out, states=ROLE_ALPHABET, salt_buckets=SALT,
+            job_id="crash", batch_buckets=1, batch_dates=1,
+        )
+    monkeypatch.setattr(Manifest, "commit", commit)
+    assert calls["n"] == 2
+    res, _ = _resume_and_compare(spark, raw, clean_out, crash_out)
+    # the batch whose commit failed is redone, the one before it is not
+    assert res.partitions_skipped[stage] == 1
+    assert res.partitions_done[stage] >= 1
 
 
 def test_cascade_empty_input(spark, raw, tmp_path):

@@ -120,3 +120,49 @@ def test_large_roundtrip_rollup_and_random():
     # long constant runs interleaved with jumps (control-stream stress)
     stepped = np.repeat(rng.random(50), 100)
     _roundtrip_vals(stepped)
+
+
+def _assert_rejects_resized(decode, blob, bits, n):
+    """Every strict truncation and a one-byte extension must raise, both
+    with the stale ``total_bits`` and with one that matches the resized
+    blob (so the layout-size check is exercised on its own)."""
+    for cut in range(len(blob)):
+        for tb in (bits, 8 * cut):
+            with pytest.raises(ValueError):
+                decode(blob[:cut], tb, n)
+    for tb in (bits, bits + 8):
+        with pytest.raises(ValueError):
+            decode(blob + b"\x00", tb, n)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.integers(min_value=-(2**52), max_value=2**52), min_size=0, max_size=40
+    ),
+    st.lists(
+        st.floats(allow_nan=True, allow_infinity=True, width=64),
+        min_size=0,
+        max_size=40,
+    ),
+)
+def test_resized_blobs_are_rejected(ts, vals):
+    ts = np.sort(np.asarray(ts, dtype=np.int64))
+    blob, bits, n = encode_timestamps(ts)
+    np.testing.assert_array_equal(decode_timestamps(blob, bits, n), ts)
+    _assert_rejects_resized(decode_timestamps, blob, bits, n)
+    vals = np.asarray(vals, dtype=np.float64)
+    blob, bits, n = encode_values(vals)
+    np.testing.assert_array_equal(
+        decode_values(blob, bits, n).view(np.uint64), vals.view(np.uint64)
+    )
+    _assert_rejects_resized(decode_values, blob, bits, n)
+
+
+def test_value_control_code_3_is_rejected():
+    # value control codes are 0/1/2; a flipped byte giving 3 would read
+    # the previous window's payload width and decode garbage
+    blob, bits, n = encode_values(np.array([1.0, 2.0]))
+    bad = blob[:8] + bytes([blob[8] | 0xC0]) + blob[9:]
+    with pytest.raises(ValueError, match="control code"):
+        decode_values(bad, bits, n)

@@ -233,65 +233,3 @@ def test_prefix_divergence_short_sequences_and_zero_variance(spark):
     }
     assert got2["s0"]["std_score"] is None and got2["s0"]["diverged"] == 0
 
-
-def test_hashed_keys_equal_string_keys(spark):
-    """The constant-width xxhash64 chain key must reproduce every output
-    of the string-key path (keys only feed equality grouping)."""
-    import random
-
-    from sequenzo_spark.operators.prefix_tree import prefix_divergence
-    from sequenzo_spark.operators.suffix_tree import suffix_rarity
-
-    rng = random.Random(7)
-    seqs = [
-        [rng.choice("ABC") for _ in range(rng.randint(1, 8))]
-        for _ in range(25)
-    ]
-    df = _df(spark, seqs)
-
-    a = sorted(map(tuple, prefix_tree_stats(df).collect()))
-    b = sorted(map(tuple, prefix_tree_stats(df, hashed=True).collect()))
-    assert a == b
-
-    a = sorted(map(tuple, prefix_rarity(df).collect()))
-    b = sorted(map(tuple, prefix_rarity(df, hashed=True).collect()))
-    assert a == b
-
-    a = sorted(map(tuple, prefix_divergence(df, min_t=1).collect()))
-    b = sorted(map(tuple, prefix_divergence(df, min_t=1, hashed=True).collect()))
-    # the two plans sum the per-depth moments in different orders — the
-    # z's (and std_score) agree only to last-ulp; flags/years are exact
-    for ra, rb in zip(a, b):
-        assert ra[0] == rb[0] and ra[2:] == rb[2:], (ra, rb)
-        assert ra[1] == pytest.approx(rb[1], rel=1e-9), (ra, rb)
-
-    a = sorted(map(tuple, suffix_rarity(df).collect()))
-    b = sorted(map(tuple, suffix_rarity(df, hashed=True).collect()))
-    assert a == b
-
-
-def test_hashed_keys_are_fixed_width(spark):
-    """The hashed path's shuffle key must be an 8-byte long, not the
-    O(depth) string (the scale rationale for hashed=True)."""
-    from pyspark.sql.types import LongType, StringType
-
-    from sequenzo_spark.operators.prefix_tree import _prefix_rows
-
-    df = _df(spark, [["A", "B", "C"]])
-    assert isinstance(
-        _prefix_rows(df).schema["prefix"].dataType, StringType
-    )
-    assert isinstance(
-        _prefix_rows(df, hashed=True).schema["prefix"].dataType, LongType
-    )
-    # the (t, prefix) aggregation's exchange therefore carries fixed-width
-    # keys; assert the plan aggregates on the bigint column end-to-end
-    plan = (
-        _prefix_rows(df, hashed=True)
-        .groupBy("t", "prefix")
-        .count()
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "prefix#" in plan and "HashAggregate" in plan

@@ -456,3 +456,45 @@ def test_rarity_per_level_long_format(spark):
     }
     assert gz[("s00", 1)] is None
     assert gz[("s00", 2)] is not None
+
+
+@pytest.mark.parametrize("group", [False, True])
+def test_suffix_indicators_mirror_prefix_on_reversed_sequences(spark, group):
+    """Suffixes of S are the prefixes of reverse(S): the from-end and
+    from-start directions of the shared level core must agree bit for
+    bit, with and without ``group_col``."""
+    from pyspark.sql import functions as F
+
+    from sequenzo_spark.operators.prefix_tree import (
+        prefix_rarity,
+        prefix_tree_stats,
+    )
+
+    rng = random.Random(29)
+    seqs = [
+        [rng.choice("ABC") for _ in range(rng.randint(1, 7))] for _ in range(40)
+    ]
+    groups = [rng.choice(["g0", "g1"]) for _ in seqs] if group else None
+    df = _df(spark, seqs, groups)
+    rev = df.withColumn("pos", -F.col("pos"))
+    gkw = {"group_col": "grp"} if group else {}
+
+    def by_seq(out):
+        return {
+            r["seq_id"]: (
+                r["rarity_score"].hex(),
+                r["path_uniqueness"],
+                r["grp"] if group else None,
+            )
+            for r in out.collect()
+        }
+
+    got = by_seq(suffix_rarity(df, **gkw))
+    assert len(got) == len(seqs)
+    assert got == by_seq(prefix_rarity(rev, **gkw))
+
+    sfx = sorted(tuple(r) for r in spell_suffix_stats(df).collect())
+    pfx = sorted(tuple(r) for r in prefix_tree_stats(rev).collect())
+    assert [(k, n, mf.hex()) for k, n, mf in sfx] == [
+        (t, n, bf.hex()) for t, n, bf in pfx
+    ]
