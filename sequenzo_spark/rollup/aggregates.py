@@ -8,7 +8,9 @@ The cascade stores ONLY algebraic quantities per tier —
                                                           dur_max
 — all exactly re-mergeable (sums of integers / integer-valued doubles are
 associative-exact in float64 below 2^53, min/max trivially), which is what
-makes 1m→1h→1d bit-exact (SURVEY.md §4). Derived floats (freq, entropy,
+makes 1m→1h→1d bit-exact (SURVEY.md §4). ``TIER_AGGS`` states each
+table's merge once; the tier merges and the cross-bucket re-sums of the
+``derive_*`` views both read it. Derived floats (freq, entropy,
 rates, means, variances) are recomputed from merged counts at every tier by
 ``derive_*`` with a DETERMINISTIC reduction order (array_sort by state before
 the fold), never depending on shuffle order or parallelism.
@@ -130,45 +132,54 @@ def rollup_1m_fused(
 
 # ------------------------------------------------------- tier → tier merge
 
-def _remerge(df: DataFrame, tier: str, keys: list[str], aggs: list) -> DataFrame:
-    return df.groupBy(
+# The merge algebra of every tier table, defined once:
+# table -> (grouping keys besides conv_bucket/time_bucket, {column: merge}).
+TIER_AGGS = {
+    "state_counts": (["state"], {"n_turns": F.sum, "w_sum": F.sum}),
+    "transitions": (
+        ["from_state", "to_state"],
+        {"t_count": F.sum, "w_count": F.sum},
+    ),
+    "spells": (
+        ["state"],
+        {
+            "n_spells": F.sum,
+            "dur_sum": F.sum,
+            "dur_sq_sum": F.sum,
+            "dur_min": F.min,
+            "dur_max": F.max,
+        },
+    ),
+}
+
+
+def _remerge(df: DataFrame, table: str, *bucket_cols) -> DataFrame:
+    keys, aggs = TIER_AGGS[table]
+    return df.groupBy(*bucket_cols, *keys).agg(
+        *[fn(c).alias(c) for c, fn in aggs.items()]
+    )
+
+
+def merge_tier(df: DataFrame, table: str, tier: str) -> DataFrame:
+    """Re-aggregate a tier table into the coarser ``tier``'s buckets."""
+    return _remerge(
+        df,
+        table,
         "conv_bucket",
         BUCKET_EXPRS[tier](F.col("time_bucket")).alias("time_bucket"),
-        *keys,
-    ).agg(*aggs)
+    )
 
 
 def merge_state_counts(df: DataFrame, tier: str) -> DataFrame:
-    return _remerge(
-        df,
-        tier,
-        ["state"],
-        [F.sum("n_turns").alias("n_turns"), F.sum("w_sum").alias("w_sum")],
-    )
+    return merge_tier(df, "state_counts", tier)
 
 
 def merge_transitions(df: DataFrame, tier: str) -> DataFrame:
-    return _remerge(
-        df,
-        tier,
-        ["from_state", "to_state"],
-        [F.sum("t_count").alias("t_count"), F.sum("w_count").alias("w_count")],
-    )
+    return merge_tier(df, "transitions", tier)
 
 
 def merge_spells(df: DataFrame, tier: str) -> DataFrame:
-    return _remerge(
-        df,
-        tier,
-        ["state"],
-        [
-            F.sum("n_spells").alias("n_spells"),
-            F.sum("dur_sum").alias("dur_sum"),
-            F.sum("dur_sq_sum").alias("dur_sq_sum"),
-            F.min("dur_min").alias("dur_min"),
-            F.max("dur_max").alias("dur_max"),
-        ],
-    )
+    return merge_tier(df, "spells", tier)
 
 
 # ------------------------------------------------------------ derivations
@@ -184,9 +195,7 @@ def derive_distribution(
     keys = ["conv_bucket", "time_bucket"] if per_conv_bucket else ["time_bucket"]
     rolled = state_counts
     if not per_conv_bucket:
-        rolled = state_counts.groupBy("time_bucket", "state").agg(
-            F.sum("n_turns").alias("n_turns"), F.sum("w_sum").alias("w_sum")
-        )
+        rolled = _remerge(state_counts, "state_counts", "time_bucket")
     arr = F.array_sort(F.collect_list(F.struct("state", "w_sum", "n_turns")))
     g = rolled.groupBy(*keys).agg(arr.alias("_arr"))
     total = F.aggregate(
@@ -241,9 +250,7 @@ def derive_transition_rates(
     )
     rolled = transitions
     if not per_conv_bucket:
-        rolled = transitions.groupBy(
-            "time_bucket", "from_state", "to_state"
-        ).agg(F.sum("t_count").alias("t_count"), F.sum("w_count").alias("w_count"))
+        rolled = _remerge(transitions, "transitions", "time_bucket")
     w = Window.partitionBy(*keys, "from_state")
     return rolled.withColumn(
         "transition_rate", F.col("w_count") / F.sum("w_count").over(w)
@@ -258,13 +265,7 @@ def derive_spell_stats(spells: DataFrame, per_conv_bucket: bool = False) -> Data
     )
     rolled = spells
     if not per_conv_bucket:
-        rolled = spells.groupBy("time_bucket", "state").agg(
-            F.sum("n_spells").alias("n_spells"),
-            F.sum("dur_sum").alias("dur_sum"),
-            F.sum("dur_sq_sum").alias("dur_sq_sum"),
-            F.min("dur_min").alias("dur_min"),
-            F.max("dur_max").alias("dur_max"),
-        )
+        rolled = _remerge(spells, "spells", "time_bucket")
     n = F.col("n_spells").cast("double")
     mean = F.col("dur_sum") / n
     var = F.col("dur_sq_sum") / n - mean * mean

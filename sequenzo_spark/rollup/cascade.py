@@ -2,32 +2,49 @@
 
 Stage graph (SURVEY.md §3.4):
 
-  transcripts ─encode→ encoded_turns ─rollup_1m→ {state_counts, transitions,
-  spells}@1m ─rollup_1h1d→ …@1h AND …@1d (fused: one stage computes the 1h
-  merge from the 1m files and the 1d merge from the in-memory 1h frames;
-  the on-disk rollup_1h/ and rollup_1d/ trees are unchanged)
+  transcripts ─encode→ encode/ ─rollup_1m→ rollup_1m/{state_counts,
+  transitions, spells} ─rollup_1h1d→ rollup_1h/…, rollup_1d/… and
+  gorilla/chunks (one stage computes the 1h merge from the 1m files, the 1d
+  merge from the in-memory 1h frames, and the Gorilla chunks of all three
+  tiers' state counts)
 
-Partitioning / batching / resume design:
+Every stage runs the same write→checksum→commit protocol (``run_stage``):
 
-- Every table is written partitioned by (conv_bucket, part_date) — the north
-  rule's salted, skew-aware (conv_id bucket, time bucket) key. Dynamic
-  partition overwrite makes re-running a half-written batch idempotent.
-- The ENCODE stage batches by part_date (row-local work, no windows).
-- The RAW→1M stage batches by **conv_bucket**, NOT by date: every
-  conversation lives in exactly one bucket, so lead/lag and spell windows
-  always see the complete sequence — a conversation spanning midnight loses
-  no transitions and no spell is split (batching by date would corrupt
-  both). Partition pruning on conv_bucket keeps each batch's scan narrow.
-- The 1M→1H and 1H→1D stages batch by part_date again: tier merges are
-  per-time-bucket algebraic re-aggregations (aggregates.py), and minute
-  buckets never straddle a day boundary.
-- Resume: each stage left-anti-joins its batch keys against the manifest
-  (checkpoint/manifest.py) and recomputes only missing ones. The manifest
-  row is committed strictly AFTER the data write, so a crash leaves either
-  (data+lineage) or (partial data, no lineage → overwritten on rerun).
-- Higher tiers read the lower tier's WRITTEN FILES, never the raw data.
+- ``build(batch)`` returns the batch's outputs keyed by their path under
+  out_root (``"encode"``, ``"rollup_1m/spells"``, ``"gorilla/chunks"``, …)
+  plus the frames to unpersist once the batch is written.
+- Each output is repartitioned by (conv_bucket, part_date) — the salted,
+  skew-aware (conv_id bucket, time bucket) key — persisted, and written
+  partitioned by it; a batch's writes run concurrently. Dynamic partition
+  overwrite makes re-running a half-written batch idempotent.
+- ONE Spark job per batch then measures every output: per partition, the
+  row count and the order-independent bit_xor of per-row xxhash64, so runs
+  at different parallelism commit comparable lineage.
+- One manifest row per written partition (``table`` = the output path) is
+  committed strictly AFTER the data write, so a crash leaves either
+  data+lineage or data without lineage, which the rerun overwrites.
+- Resume: a batch is done iff the manifest holds a row for it; a rerun
+  recomputes only the others. Each stage names the partition column its
+  batches are keyed by.
 
-At 100 TB: `batch_*` bounds per-job input; salt_buckets spreads giant
+Batching:
+
+- encode batches by part_date, over the calendar between one min/max-ts
+  aggregate's bounds (row-local work, no windows). A calendar day with no
+  turns writes nothing, so it is an empty batch again on every rerun.
+- rollup_1m batches by **conv_bucket**, NOT by date: every conversation
+  lives in exactly one bucket, so lead/lag and spell windows always see the
+  complete sequence — a conversation spanning midnight loses no transitions
+  and no spell is split (batching by date would corrupt both). Partition
+  pruning on conv_bucket keeps each batch's scan narrow.
+- rollup_1h1d batches by part_date again: tier merges are per-time-bucket
+  algebraic re-aggregations (aggregates.py ``TIER_AGGS``), and minute and
+  hour buckets never straddle a day boundary.
+- The tier stages take their batch keys from the lower tier's partition
+  directories (``_list_partitions``, zero Spark jobs) and read the lower
+  tier's WRITTEN FILES, never the raw data; no lower tier, no batches.
+
+At 100 TB: ``batch_*`` bounds per-job input; salt_buckets spreads giant
 conversations; each rollup is one partial+final hash aggregation whose
 grouping key prefixes the write partition key, so no second shuffle before
 the write. AQE handles residual skew within a batch.
@@ -37,6 +54,8 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
+from datetime import timedelta
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,14 +63,12 @@ from pyspark.sql import functions as F
 from sequenzo_spark.checkpoint.manifest import Manifest
 from sequenzo_spark.ingest import encode_states, refined_alphabet_col
 from sequenzo_spark.rollup.aggregates import (
-    merge_spells,
-    merge_state_counts,
-    merge_transitions,
+    TIER_AGGS,
+    merge_tier,
     rollup_1m_fused,
     with_conv_bucket,
 )
 
-TIER_TABLES = ("state_counts", "transitions", "spells")
 PART_COLS = ["conv_bucket", "part_date"]
 
 
@@ -81,57 +98,65 @@ def _chunk(xs: list, size: int | None):
         yield xs[i : i + size]
 
 
-def _list_part_dates(path: str) -> list[str]:
-    """Distinct part_date partition values from the DIRECTORY LISTING —
-    zero Spark jobs, no data scan (Iceberg metadata tables give the same at
-    cluster scale). Layout: path/conv_bucket=*/part_date=*."""
+def _list_partitions(path: str, col: str) -> list[str]:
+    """Distinct values of the partition column ``col`` (one of PART_COLS)
+    from the DIRECTORY LISTING — zero Spark jobs, no data scan (Iceberg
+    metadata tables give the same at cluster scale). Layout:
+    path/conv_bucket=*/part_date=*; a missing path lists nothing."""
     import glob
     import os
 
-    vals = {
-        os.path.basename(d).split("=", 1)[1]
-        for d in glob.glob(os.path.join(path, "conv_bucket=*", "part_date=*"))
-    }
-    return sorted(vals)
+    level = PART_COLS.index(col) - len(PART_COLS)
+    dirs = glob.glob(os.path.join(path, *(f"{c}=*" for c in PART_COLS)))
+    return sorted({d.split(os.sep)[level].split("=", 1)[1] for d in dirs})
 
 
-def _write_and_measure(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    read_filter=None,
-) -> list[tuple[str, int, int | None]]:
-    """Checksum-less write path (the bulk passthrough encode stage): write
-    partitioned parquet, then count rows per (cb,date) from the written
-    parquet FOOTERS (a columnless grouped count reads metadata only) — no
-    persist, no second pass over the data. The encode invariant is covered
-    separately by the text-passthrough check.
+def _with_part_date(df: DataFrame) -> DataFrame:
+    return df.withColumn("part_date", F.to_date("time_bucket").cast("string"))
 
-    Checksummed tier tables take the fused persist→parallel-write→single
-    union-metrics job inside run_stage instead (one collect per STAGE, not
-    per table).
 
-    Repartitions by the write layout first: one task per (cb, date)
-    partition dir → one file each, instead of every task spraying a small
-    file into every dir (small-files write amplification)."""
-    df.repartition(*[F.col(c) for c in PART_COLS]).write.mode(
-        "overwrite"
-    ).partitionBy(*PART_COLS).parquet(path)
-    # read_filter restricts the footer-count read-back to THIS batch's
-    # partitions (partition pruning on the dir layout): without it each
-    # batch re-scans every footer written so far — O(batches²) metadata
-    # reads — and re-commits manifest rows for earlier batches.
-    rb = spark.read.parquet(path)
-    if read_filter is not None:
-        rb = rb.filter(read_filter)
-    agg = rb.groupBy(*PART_COLS).agg(F.count(F.lit(1)).alias("n")).collect()
-    return [
-        (f"{r['conv_bucket']}/{r['part_date']}", r["n"], None) for r in agg
-    ]
+def _write_batch(out_root: str, outputs: dict[str, DataFrame]) -> list:
+    """Write one batch's outputs and measure them: persist each once, submit
+    the independent writes concurrently so the scheduler interleaves them,
+    then compute every output's per-partition rows and checksum in ONE job
+    (a union of uniform (cb, date, n, cs, path) aggregates). The per-batch
+    driver-job count is the cascade's fixed-cost floor, and it is what
+    stops throughput from scaling when the per-level data work shrinks
+    (BENCH/BASELINE.md).
+
+    Repartitioning by the write layout gives one task per (cb, date)
+    directory, so one file each instead of every task spraying a small
+    file into every directory."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    parts = {p: df.repartition(*PART_COLS).persist() for p, df in outputs.items()}
+    try:
+        with ThreadPoolExecutor(max_workers=len(parts)) as pool:
+            list(
+                pool.map(
+                    lambda p: parts[p]
+                    .write.mode("overwrite")
+                    .partitionBy(*PART_COLS)
+                    .parquet(f"{out_root}/{p}"),
+                    parts,
+                )
+            )
+        metrics = [
+            df.groupBy(*PART_COLS)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.bit_xor(F.xxhash64(*df.columns)).alias("cs"),
+            )
+            .withColumn("path", F.lit(p))
+            for p, df in parts.items()
+        ]
+        return reduce(DataFrame.unionByName, metrics).collect()
+    finally:
+        for df in parts.values():
+            df.unpersist()
 
 
 def _check_job_config(
-    spark: SparkSession,
     out_root: str,
     job_id: str,
     salt_buckets: int,
@@ -145,7 +170,7 @@ def _check_job_config(
     is part of the config because Gorilla chunk output commits with the
     fused rollup_1h1d batches: resuming a compress=False run with
     compress=True (or vice versa) would silently skip chunk output for the
-    already-committed batches (round-5 advisor finding)."""
+    already-committed batches."""
     import json
     import os
     import uuid
@@ -194,12 +219,10 @@ def run_cascade(
     resume: bool = True,
     fail_after_batches: int | None = None,
     compress: bool = True,
-    encode_dates: list[str] | None = None,
 ) -> CascadeResult:
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     _check_job_config(
-        spark, out_root, job_id, salt_buckets, states, use_refined_alphabet,
-        compress,
+        out_root, job_id, salt_buckets, states, use_refined_alphabet, compress
     )
     manifest = Manifest(spark, f"{out_root}/_manifest")
     res = CascadeResult(job_id=job_id)
@@ -207,19 +230,17 @@ def run_cascade(
 
     def run_stage(
         stage: str,
+        batch_col: str,  # the PART_COLS column the batch keys are values of
         batch_keys: list,
-        batch_filter,  # (df, batch) -> df
-        build,  # (sub, batch) -> dict table -> DataFrame with PART_COLS
-        src: DataFrame,
+        build,  # (batch) -> ({path under out_root: DataFrame}, [to unpersist])
         batch_size: int | None,
-        checksums: bool = True,
-        read_filter_of=None,  # (batch) -> Column pruning the read-back
     ):
-        # manifest rows are per fine (conv_bucket/part_date) partition; a
-        # batch key is done iff any of its fine keys committed (they commit
-        # atomically together, after the data write).
+        # manifest rows are per (conv_bucket/part_date) partition; a batch
+        # key is done iff any of its partitions committed (a batch's rows
+        # commit together, after its data write)
+        level = PART_COLS.index(batch_col)
         done = (
-            {_batch_of(stage, k) for k in manifest.completed(job_id, stage)}
+            {k.split("/")[level] for k in manifest.completed(job_id, stage)}
             if resume
             else set()
         )
@@ -233,107 +254,28 @@ def run_cascade(
             if not batch:
                 continue
             t0 = time.time()
-            sub = batch_filter(src, batch)
-            built = build(sub, batch)
-            outputs, cleanup = (
-                built if isinstance(built, tuple) else (built, None)
-            )
-            commit_rows: list[dict] = []
-
-            def _path_of(tname):
-                # a "/" in the table name addresses a path relative to
-                # out_root directly — the fused 1h+1d stage uses this to
-                # keep the on-disk tier layout (rollup_1h/…, rollup_1d/…)
-                # identical to the unfused cascade's
-                if "/" in tname:
-                    return f"{out_root}/{tname}"
-                return (
-                    f"{out_root}/{stage}/{tname}"
-                    if len(outputs) > 1
-                    else f"{out_root}/{stage}"
-                )
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            if not checksums:
-                def write_one(item):
-                    tname, tdf = item
-                    return tname, _write_and_measure(
-                        spark,
-                        tdf,
-                        _path_of(tname),
-                        read_filter=(
-                            read_filter_of(batch) if read_filter_of else None
-                        ),
-                    )
-
-                with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
-                    results = list(pool.map(write_one, outputs.items()))
-            else:
-                # persist each table once; submit the (independent) write
-                # jobs concurrently so the scheduler interleaves them; then
-                # compute ALL tables' per-partition metrics in ONE job — a
-                # union of uniform (cb, date, n, checksum, table) aggregates.
-                # One collect instead of one per table: per-stage driver-job
-                # count is the cascade's fixed-cost floor, and it is what
-                # stops throughput from scaling when the per-level data work
-                # shrinks (BENCH/BASELINE.md).
-                reparted = {
-                    t: tdf.repartition(*[F.col(c) for c in PART_COLS]).persist()
-                    for t, tdf in outputs.items()
-                }
-                try:
-                    with ThreadPoolExecutor(max_workers=len(reparted)) as pool:
-                        list(
-                            pool.map(
-                                lambda item: item[1]
-                                .write.mode("overwrite")
-                                .partitionBy(*PART_COLS)
-                                .parquet(_path_of(item[0])),
-                                reparted.items(),
-                            )
-                        )
-                    metric_frames = [
-                        tdf.withColumn("_h", F.xxhash64(*tdf.columns))
-                        .groupBy(*PART_COLS)
-                        .agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.expr("bit_xor(_h)").alias("cs"),
-                        )
-                        .withColumn("_t", F.lit(tname))
-                        for tname, tdf in reparted.items()
-                    ]
-                    m = metric_frames[0]
-                    for f in metric_frames[1:]:
-                        m = m.unionByName(f)
-                    agg = m.collect()
-                finally:
-                    for tdf in reparted.values():
-                        tdf.unpersist()
-                results = {}
-                for r in agg:
-                    results.setdefault(r["_t"], []).append(
-                        (f"{r['conv_bucket']}/{r['part_date']}", r["n"], r["cs"])
-                    )
-                results = list(results.items())
+            outputs, frames = build(batch)
+            try:
+                metrics = _write_batch(out_root, outputs)
+            finally:
+                for df in frames:
+                    df.unpersist()
             wall = int((time.time() - t0) * 1000)
-            for tname, metrics in results:
-                for key, n, cs in metrics:
-                    res.rows_out[stage] += n
-                    commit_rows.append(
-                        dict(
-                            job_id=job_id,
-                            stage=stage,
-                            partition_key=key,
-                            table=tname,
-                            rows_out=n,
-                            checksum=cs,
-                            wall_ms=wall,
-                        )
+            res.rows_out[stage] += sum(r["n"] for r in metrics)
+            manifest.commit(
+                [
+                    dict(
+                        job_id=job_id,
+                        stage=stage,
+                        partition_key=f"{r['conv_bucket']}/{r['part_date']}",
+                        table=r["path"],
+                        rows_out=r["n"],
+                        checksum=r["cs"],
+                        wall_ms=wall,
                     )
-            if cleanup is not None:
-                cleanup()
-            manifest.commit(commit_rows)
+                    for r in metrics
+                ]
+            )
             res.partitions_done[stage] += len(batch)
             if failures_left[0] is not None:
                 failures_left[0] -= 1
@@ -343,140 +285,78 @@ def run_cascade(
                     )
         res.wall_ms[stage] = int((time.time() - t_stage) * 1000)
 
-    def _batch_of(stage: str, part_key: str) -> str:
-        cb, date = part_key.split("/", 1)
-        return cb if stage == "rollup_1m" else date
-
     # ---- stage: encode (batched by date; carries text unchanged) ---------
-    enc_src = with_conv_bucket(transcripts, buckets=salt_buckets).withColumn(
-        "part_date", F.to_date("ts").cast("string")
+    enc_src = (
+        with_conv_bucket(transcripts, buckets=salt_buckets)
+        .withColumn("part_date", F.to_date("ts").cast("string"))
+        .withColumn(
+            "state",
+            refined_alphabet_col() if use_refined_alphabet else F.col(state_col),
+        )
     )
-    enc_src = enc_src.withColumn(
-        "state",
-        refined_alphabet_col() if use_refined_alphabet else F.col(state_col),
-    )
-    if encode_dates is None:
-        # Batch list from ONE min/max-ts aggregate + driver-side calendar
-        # expansion — a columnar partial-agg pass (parquet footer stats serve
-        # it where available), NOT the previous distinct+shuffle over every
-        # row. With an Iceberg/partitioned source, pass ``encode_dates`` from
-        # partition metadata instead (the same zero-scan mechanism the tier
-        # stages use via _list_part_dates). Calendar days with no rows cost
-        # one empty no-op batch each.
-        import datetime as _dt
+    # Batch list from ONE min/max-ts aggregate + driver-side calendar
+    # expansion — a columnar partial-agg pass (parquet footer stats serve
+    # it where available), not a distinct+shuffle over every row. Empty
+    # input gives (None, None): zero batches here and in every later stage.
+    lo, hi = transcripts.agg(F.min("ts"), F.max("ts")).first()
+    n_days = 0 if lo is None else (hi.date() - lo.date()).days + 1
+    days = [str(lo.date() + timedelta(days=i)) for i in range(n_days)]
 
-        lo, hi = transcripts.agg(F.min("ts"), F.max("ts")).first()
-        if lo is None:
-            # Empty input: min/max aggregate returns (None, None); run zero
-            # encode batches (the previous distinct-collect path degraded the
-            # same way) instead of raising on None.date().
-            encode_dates = []
-        else:
-            d0, d1 = lo.date(), hi.date()
-            encode_dates = [
-                str(d0 + _dt.timedelta(days=i)) for i in range((d1 - d0).days + 1)
-            ]
-    enc_dates = sorted(str(x) for x in encode_dates)
-    run_stage(
-        "encode",
-        enc_dates,
-        lambda df, b: df.filter(F.col("part_date").isin([str(x) for x in b])),
-        lambda sub, _b: {"encoded_turns": encode_states(sub, states, state_col="state")},
-        enc_src,
-        batch_dates,
-        checksums=False,  # bulk passthrough: footer counts only (see above)
-        read_filter_of=lambda b: F.col("part_date")
-        .cast("string")
-        .isin([str(x) for x in b]),
-    )
+    def build_encode(batch):
+        sub = enc_src.filter(F.col("part_date").isin(batch))
+        return {"encode": encode_states(sub, states, state_col="state")}, []
 
-    if not enc_dates:
-        # Empty input (or an explicit empty encode_dates): nothing was
-        # written, so there is no encode/ directory for the tier stages to
-        # read. Record the downstream stages as run-with-zero-rows.
-        for stage in ["rollup_1m", "rollup_1h1d"]:
-            res.stages_run.append(stage)
-            res.partitions_skipped[stage] = 0
-            res.partitions_done[stage] = 0
-            res.rows_out[stage] = 0
-            res.wall_ms[stage] = 0
-        return res
+    run_stage("encode", "part_date", days, build_encode, batch_dates)
 
     # ---- stage: rollup_1m — batched by conv_bucket (full conv context) ---
-    encoded = spark.read.parquet(f"{out_root}/encode")
-
-    def build_1m(sub: DataFrame, _batch):
-        enriched, tables = rollup_1m_fused(sub)
-        out = {
-            name: df.withColumn(
-                "part_date", F.to_date("time_bucket").cast("string")
+    def build_1m(batch):
+        enriched, tables = rollup_1m_fused(
+            spark.read.parquet(f"{out_root}/encode").filter(
+                F.col("conv_bucket").isin(batch)
             )
-            for name, df in tables.items()
-        }
-        return out, lambda: enriched.unpersist()
+        )
+        out = {f"rollup_1m/{t}": _with_part_date(df) for t, df in tables.items()}
+        return out, [enriched]
 
+    buckets = _list_partitions(f"{out_root}/encode", "conv_bucket")
     run_stage(
         "rollup_1m",
-        list(range(salt_buckets)),
-        lambda df, b: df.filter(F.col("conv_bucket").isin([int(x) for x in b])),
+        "conv_bucket",
+        sorted(int(b) for b in buckets),
         build_1m,
-        encoded,
         batch_buckets,
     )
 
-    # ---- stage: rollup_1h1d — FUSED 1m→1h→1d merge (round-4) -------------
-    # The 1h and 1d tiers were separate stages through round 3; each stage
-    # carries a fixed driver cost (session scheduling, one metrics collect,
-    # manifest commit) that caps scaling efficiency once the per-level data
-    # work shrinks (BENCH/BASELINE.md). A 1d bucket needs exactly one
-    # part_date of 1h rows, so a date batch can compute BOTH tiers: 1h is
-    # aggregated from the 1m files, persisted, written, and the 1d merge
-    # reads the persisted 1h FRAMES (in-memory lineage) instead of reading
-    # the 1h files back. On-disk layout is unchanged (path-style table
-    # names), so readers (gorilla, queries, tests) see the same tree; both
-    # tiers' partitions commit atomically per batch in the manifest.
-    mergers = {
-        "state_counts": merge_state_counts,
-        "transitions": merge_transitions,
-        "spells": merge_spells,
-    }
-    dates = _list_part_dates(f"{out_root}/rollup_1m/state_counts")
-
-    def build_1h1d(_sub, batch):
-        days = [str(b) for b in batch]
-        h_tables = {}
-        low_sc = None
-        for tname, fn in mergers.items():
-            low = spark.read.parquet(f"{out_root}/rollup_1m/{tname}").filter(
-                F.col("part_date").cast("string").isin(days)
+    # ---- stage: rollup_1h1d — FUSED 1m→1h→1d merge ----------------------
+    # Each stage carries a fixed driver cost (scheduling, one metrics
+    # collect, a manifest commit) that caps scaling efficiency once the
+    # per-level data work shrinks (BENCH/BASELINE.md). A 1d bucket needs
+    # exactly one part_date of 1h rows, so a date batch computes BOTH
+    # tiers: 1h is aggregated from the 1m files and persisted, and the 1d
+    # merge reads the persisted 1h FRAMES instead of the 1h files; both
+    # tiers' partitions commit atomically per batch.
+    def build_1h1d(batch):
+        low_sc, h = None, {}
+        for t in TIER_AGGS:
+            low = spark.read.parquet(f"{out_root}/rollup_1m/{t}").filter(
+                F.col("part_date").cast("string").isin(batch)
             )
-            if compress and tname == "state_counts":
+            if compress and t == "state_counts":
                 # the 1m state_counts frame feeds BOTH the 1h merge and the
                 # gorilla point union — cache it so the batch scans the 1m
                 # parquet once instead of twice
-                low = low.persist()
-                low_sc = low
-            h = fn(low, "1h").withColumn(
-                "part_date", F.to_date("time_bucket").cast("string")
-            )
-            h_tables[tname] = h.persist()
-        out = {f"rollup_1h/{t}": df for t, df in h_tables.items()}
-        for tname, fn in mergers.items():
-            out[f"rollup_1d/{tname}"] = fn(h_tables[tname], "1d").withColumn(
-                "part_date", F.to_date("time_bucket").cast("string")
-            )
+                low_sc = low = low.persist()
+            h[t] = _with_part_date(merge_tier(low, t, "1h")).persist()
+        out = {f"rollup_1h/{t}": df for t, df in h.items()}
+        for t, df in h.items():
+            out[f"rollup_1d/{t}"] = _with_part_date(merge_tier(df, t, "1d"))
         if compress:
-            # ---- fused gorilla chunking (round-5) ------------------------
-            # Through round 4 this was a separate stage that RE-READ all
-            # three tier tables from disk (another full 1m scan + shuffle
-            # plus a stage's fixed driver cost — the fixed floor is what
-            # caps scaling efficiency, BENCH/BASELINE.md). The batch already
-            # holds every input in memory: 1m state_counts (cached above),
-            # the persisted 1h frames, and the 1d frames — so one Gorilla
-            # chunk per (tier, conv_bucket, state, day) is built here and
-            # commits atomically with the tiers it encodes. Stored blobs
-            # are the tiers' durable point format (north rule);
-            # decompression is bit-exact (compression/gorilla.py).
+            # One Gorilla chunk per (tier, conv_bucket, state, day), built
+            # from the frames the batch already holds (1m state_counts
+            # cached above, the persisted 1h frames, the 1d frames) and
+            # committed atomically with the tiers it encodes. Stored blobs
+            # are the tiers' durable point format; decompression is
+            # bit-exact (compression/gorilla.py).
             from sequenzo_spark.compression.gorilla import (
                 gorilla_compress_chunks,
             )
@@ -493,7 +373,7 @@ def run_cascade(
 
             pts = (
                 _pts(low_sc, "1m")
-                .unionByName(_pts(h_tables["state_counts"], "1h"))
+                .unionByName(_pts(h["state_counts"], "1h"))
                 .unionByName(_pts(out["rollup_1d/state_counts"], "1d"))
             )
             out["gorilla/chunks"] = gorilla_compress_chunks(
@@ -502,21 +382,13 @@ def run_cascade(
                 ts_col="ts",
                 value_col="value",
             )
-
-        def cleanup():
-            for df in h_tables.values():
-                df.unpersist()
-            if low_sc is not None:
-                low_sc.unpersist()
-
-        return out, cleanup
+        return out, [*h.values(), *([low_sc] if compress else [])]
 
     run_stage(
         "rollup_1h1d",
-        dates,
-        lambda df, b: df,  # build() reads + prunes the lower tier itself
+        "part_date",
+        _list_partitions(f"{out_root}/rollup_1m/state_counts", "part_date"),
         build_1h1d,
-        None,
         batch_dates,
     )
 

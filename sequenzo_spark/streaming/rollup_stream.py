@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sequenzo_spark.rollup.aggregates import with_conv_bucket
+
 
 def streaming_state_counts_1m(
     turns_stream: DataFrame,
@@ -33,16 +35,12 @@ def streaming_state_counts_1m(
     the append-mode sink emits exactly one immutable row per key — the same
     algebraic shape the batch cascade writes."""
     w = F.window(F.col(ts_col), "1 minute")
+    live = turns_stream.withWatermark(ts_col, watermark).filter(
+        F.col(state_col).isNotNull()
+    )
     return (
-        turns_stream.withWatermark(ts_col, watermark)
-        .filter(F.col(state_col).isNotNull())
-        .groupBy(
-            F.pmod(F.xxhash64(F.col("conv_id")), F.lit(salt_buckets))
-            .cast("int")
-            .alias("conv_bucket"),
-            w,
-            F.col(state_col).alias("state"),
-        )
+        with_conv_bucket(live, buckets=salt_buckets)
+        .groupBy("conv_bucket", w, F.col(state_col).alias("state"))
         .agg(F.count(F.lit(1)).alias("n_turns"), F.sum(F.lit(1.0)).alias("w_sum"))
         .select(
             "conv_bucket",

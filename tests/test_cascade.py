@@ -160,10 +160,16 @@ def test_kill_and_resume_identical_output(spark, raw, clean_out, tmp_path):
     res, manifest = _resume_and_compare(spark, raw, clean_out, crash_out)
     assert sum(res.partitions_skipped.values()) >= 3
 
-    # manifest has per-partition lineage rows with metrics
+    # manifest has per-partition lineage rows with metrics, and every
+    # stage's rows carry a checksum (encode included), so the comparison
+    # above checks encode's content and not only its row counts
     rows = manifest.collect()
     assert all(r.rows_out >= 0 and r.wall_ms >= 0 for r in rows)
     assert {r.stage for r in rows} == {"encode", "rollup_1m", "rollup_1h1d"}
+    clean = Manifest(spark, f"{clean_out}/_manifest").stats("clean").collect()
+    assert [r for r in rows + clean if r.checksum is None] == []
+    # the manifest's table value is the output's path under out_root
+    assert {r.table for r in rows} == set(TABLES)
 
 
 @pytest.mark.parametrize("stage", ["rollup_1m", "rollup_1h1d"])
@@ -211,6 +217,61 @@ def test_cascade_empty_input(spark, raw, tmp_path):
     assert all(v == 0 for v in res.rows_out.values())
 
 
+def test_empty_salt_buckets_are_not_recomputed_on_rerun(spark, tmp_path):
+    """Two conversations over eight salt buckets leave at least six buckets
+    empty. rollup_1m batches only the buckets that encode wrote, so a rerun
+    over a finished out_root has nothing left to do in any stage."""
+    raw = generate_transcripts(spark, n_convs=2, seed=3, giant_conv_turns=0)
+    out = str(tmp_path / "cascade_sparse")
+
+    def run():
+        return run_cascade(
+            spark, raw, out, states=ROLE_ALPHABET, salt_buckets=8,
+            job_id="js",
+        )
+
+    first = run()
+    assert first.partitions_done["rollup_1m"] <= 2
+    again = run()
+    assert again.partitions_done == {s: 0 for s in again.stages_run}
+    assert again.partitions_skipped == first.partitions_done
+
+
+def test_refined_alphabet_cascade(spark, raw, tmp_path):
+    """use_refined_alphabet=True: the tiers count role⊗tool states
+    ('tool:bash', …) and encode still passes the text through unchanged."""
+    from sequenzo_spark.ingest import refined_alphabet_col
+    from sequenzo_spark.rollup.aggregates import with_conv_bucket
+    from sequenzo_spark.schema import TOOL_VALUES
+
+    states = [s for s in ROLE_ALPHABET if s != "tool"] + [
+        f"tool:{t}" for t in TOOL_VALUES
+    ]
+    out = str(tmp_path / "cascade_refined")
+    run_cascade(
+        spark, raw, out, states=states, salt_buckets=SALT, job_id="jr",
+        use_refined_alphabet=True,
+    )
+    assert text_passthrough_violations(
+        raw, spark.read.parquet(f"{out}/encode")
+    ) == 0
+    direct_1h = (
+        with_conv_bucket(raw, buckets=SALT)
+        .groupBy(
+            "conv_bucket",
+            F.date_trunc("hour", "ts").alias("time_bucket"),
+            refined_alphabet_col().alias("state"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_turns"), F.sum(F.lit(1.0)).alias("w_sum"))
+    )
+    got_1h = spark.read.parquet(f"{out}/rollup_1h/state_counts")
+    cols = ["conv_bucket", "time_bucket", "state", "n_turns", "w_sum"]
+    assert _rows(got_1h, cols) == _rows(direct_1h, cols)
+    seen = {r.state for r in got_1h.select("state").distinct().collect()}
+    assert {s for s in seen if s.startswith("tool:")}
+    assert seen <= set(states)
+
+
 def test_compress_flag_is_config_drift(spark, raw, tmp_path):
     """Gorilla chunk output commits with the fused rollup_1h1d batches, so
     resuming a compress=False run with compress=True would silently skip
@@ -241,7 +302,7 @@ def test_manifest_read_errors_are_not_an_empty_manifest(spark, tmp_path):
     m = Manifest(spark, str(path))
     m.commit([dict(
         job_id="j", stage="encode", partition_key="0/2024-01-01",
-        table="encoded_turns", rows_out=1, checksum=None, wall_ms=0,
+        table="encode", rows_out=1, checksum=None, wall_ms=0,
     )])
     assert m.completed("j", "encode") == {"0/2024-01-01"}
     (part,) = path.glob("part-*.parquet")
